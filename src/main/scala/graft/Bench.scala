@@ -1,20 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // input-derived, NOT core-derived (r15; see graft.Sizing): the
-      // same data gets the same task count at every $SPARK_GRAFT_CPUS,
-      // so the low-core re-run measures parallel compute instead of
-      // task-count overhead
-      .config("spark.sql.shuffle.partitions", Sizing.shufflePartitions(sfDir))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // shuffle partitions are input-derived, NOT core-derived (see
+    // graft.Sizing): the same data gets the same task count at every
+    // $SPARK_GRAFT_CPUS, so the low-core re-run measures parallel
+    // compute instead of task-count overhead
+    val spark = Sizing.session(sfDir)
     // Untimed steady-state warm-up (JIT + codegen + parquet footers) on
     // the smallest SF. Different data dir -> timed runs below get no
     // cached-plan/data reuse; clearCache drops any persisted sketches so
@@ -71,11 +63,17 @@ object Bench {
       .map(_.toInt).getOrElse(3).max(1)
     val names = selected.keys.toIndexedSeq
     val timings = collection.mutable.Map.empty[String, Double]
+    // A pass that throws is not a sample: its elapsed time is how fast
+    // the query failed, and folding it into the min would report a
+    // crashed query as a fast one. A query with no successful pass is
+    // left out of the results and named on stderr.
+    val failures = collection.mutable.Map.empty[String, String]
     def timeOne(name: String): Unit = {
       val fn = selected(name)
       val t0 = System.nanoTime()
-      try fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-      catch { case _: Throwable => }
+      val ok =
+        try { fn(spark, sfDir).write.mode("overwrite").format("noop").save(); true }
+        catch { case e: Throwable => failures(name) = String.valueOf(e.getMessage); false }
       val d = (System.nanoTime() - t0) / 1e9
       // sketch/overlap queries persist intermediates they cannot
       // safely release themselves (Verify does the same); dropping
@@ -83,7 +81,7 @@ object Bench {
       // (it pays its own persist) without cached frames accumulating
       // across the run
       spark.catalog.clearCache()
-      timings(name) = timings.get(name).fold(d)(math.min(_, d))
+      if (ok) timings(name) = timings.get(name).fold(d)(math.min(_, d))
     }
     (1 to repeat).foreach { _ => names.foreach(timeOne) }
     // Outlier re-time: the interleaved passes bound noise probabilis-
@@ -107,11 +105,15 @@ object Bench {
         spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
         System.gc()
       }
-      val slowest = names.sortBy(n => -timings(n)).take(12)
+      val slowest = names.filter(timings.contains)
+        .sortBy(n => -timings(n)).take(12)
       slowest.foreach { n => settle(); timeOne(n) }
       slowest.foreach { n => settle(); timeOne(n) }
     }
-    val results = names.map(n => n -> timings(n)).toMap
+    val results = names.flatMap(n => timings.get(n).map(n -> _)).toMap
+    names.filterNot(timings.contains).foreach { n =>
+      System.err.println(s"[bench] $n failed every pass: ${failures(n)}")
+    }
     // The driver captures only the LAST 2000 chars of stdout and sbt
     // appends its own "[success] Total time" line after ours, so the
     // final JSON line must stay well under ~1800 chars — a full 92-query

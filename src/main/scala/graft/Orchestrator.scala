@@ -236,16 +236,7 @@ object Orchestrator {
       "usage: Orchestrator <sfDir> <outDir> [fromVersion]")
     val Array(sfDir, outDir) = args.take(2)
     val fromVersion = if (args.length == 3) args(2).toInt else 1
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // input-derived, not core-derived (graft.Sizing) — the production
-      // justification lives there; override: SPARK_GRAFT_SHUFFLE_PARTS
-      .config("spark.sql.shuffle.partitions", Sizing.shufflePartitions(sfDir))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sizing.session(sfDir)
     val raw = if (fromVersion == 1)
       Some(Pipeline.fromDocuments(Tables.documents(spark, sfDir)).select("url", "text"))
     else None

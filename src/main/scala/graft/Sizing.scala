@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
+
 /** Input-size-derived session sizing (guide §2.2/§2.3: shuffle
   * partitioning should follow the data, and AQE's coalescing — not a
   * constant pinned to the local core count — is the mechanism that
@@ -44,9 +46,33 @@ object Sizing {
     * the core count.
     */
   def shufflePartitions(dir: String): Int =
-    sys.env.get("SPARK_GRAFT_SHUFFLE_PARTS").map(_.trim.toInt).getOrElse {
+    sys.env.get("SPARK_GRAFT_SHUFFLE_PARTS").map(parseShuffleParts).getOrElse {
       val bytes = sizeOf(new java.io.File(dir))
       math.min(Cap.toLong, math.max(Floor.toLong,
         bytes / BytesPerPartition + 1)).toInt
     }
+
+  /** `SPARK_GRAFT_SHUFFLE_PARTS` as a positive count; anything else fails
+    * with an error that names the variable.
+    */
+  def parseShuffleParts(raw: String): Int =
+    raw.trim.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+      s"SPARK_GRAFT_SHUFFLE_PARTS must be a positive integer, got '$raw'"))
+
+  /** The session every entry point (Bench, Verify, Orchestrator)
+    * runs under: `local[$SPARK_GRAFT_CPUS]` (default 4), shuffle
+    * partitions derived from `dir` as above, UTC, no UI, WARN logging.
+    * `perfbench/src/Main.scala` mirrors these settings.
+    */
+  def session(dir: String): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", shufflePartitions(dir))
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 }

@@ -397,9 +397,9 @@ object Curation {
     // ~8-token string (~7× smaller cache at any scale, the r14 weak
     // finding's prescribed fix, and −29% wall at sf0.1). Results are
     // identical modulo a 64-bit collision between two spans of one
-    // corpus (p ≈ n²/2⁶⁵; ~1e-5 at the sf0.1 volume — R15Check pins
-    // row equality at sf0.01/sf0.1 and the DuckDB oracle, which
-    // replays exact strings, re-verifies the hash).
+    // corpus (p ≈ n²/2⁶⁵; ~1e-5 at the sf0.1 volume — the q_dup_spans
+    // DuckDB oracle replays exact strings, so its hash check pins row
+    // equality at sf0.01).
     val spans = df
       .withColumn("__toks", TextMetrics.tokens(col(textCol)))
       .select(col(idCol), explode(
@@ -470,8 +470,8 @@ object Curation {
     // of an ~n-token string. That shrinks the r14 weak-finding cache
     // ~7× at any scale AND cut the query 2.51 → 1.72 s at sf0.1
     // (cold-JVM interleaved min-of-3). Identical results modulo a
-    // 64-bit collision (p ≈ n²/2⁶⁵; R15Check pins row equality at
-    // sf0.01/sf0.1, oracle hash re-verified).
+    // 64-bit collision (p ≈ n²/2⁶⁵; the q_span_removal DuckDB oracle
+    // replays exact strings and pins row equality by hash).
     val grams = base
       .select(col(idCol), posexplode(
         when(size(col("__toks")) >= n,
@@ -577,8 +577,8 @@ object Curation {
     * exact strings, so a collision cannot pass unnoticed at the checked
     * SFs). Pair counts leave each map partition pre-aggregated —
     * ≤ |sources|² distinct keys — so the pair exchange is bytes, not
-    * rows. R15Check: row-identical at sf0.01/sf0.1; R15Profile `ovl`:
-    * 1.41 → 1.19 s at sf0.1.
+    * rows. Row identity is pinned by the q_source_overlap DuckDB
+    * oracle; measured 1.41 → 1.19 s at sf0.1 (r15).
     */
   def sourceOverlap(df: DataFrame, sourceCol: String = "source",
                     textCol: String = "text",

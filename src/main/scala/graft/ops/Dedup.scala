@@ -110,10 +110,7 @@ object Dedup {
     * ~2^-128 per pair).
     */
   def dedupStage(df0: DataFrame, textCol: String = "text_pii_masked",
-                 seqCol: String = "ingest_seq",
-                 branchCache: Option[org.apache.spark.storage.StorageLevel] =
-                   Some(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      : DataFrame = {
+                 seqCol: String = "ingest_seq"): DataFrame = {
     // The frame is consumed twice (narrow window branch + join-back), so
     // persist at the branch point: without it the flags branch re-runs
     // the whole upstream scalar chain — the stage-2/3 regex pipeline at
@@ -123,7 +120,8 @@ object Dedup {
     // multi-consumer frame in the engine.
     //
     // Columnar-cache compression is OFF for this one persist (r14 A/B
-    // at the 100x layout, DedupProfile + CacheFootprint): the frame is
+    // at the 100x layout, numbers in SCALING.md; `perfbench/run.py
+    // --trace 1` reports the stage as dedup.*): the frame is
     // dominated by four high-entropy text columns the lightweight
     // columnar codecs barely shrink — 1.10x footprint, measured — while
     // encode+2-consumer-decode costs 4.3 s of the 12.9 s dedup prefix
@@ -131,14 +129,9 @@ object Dedup {
     // 1000-executor shape are unchanged either way (the cache is
     // node-local); a 10% bigger spill is the right price for dropping
     // one compress and two decompress passes over ~2 KB/row. The conf
-    // is captured by CacheManager at persist() time (confirmed by the
-    // A/B itself, which toggles it per-variant at build time), so the
-    // save/restore scopes it to exactly this cache.
-    //
-    // `branchCache` exposes the storage strategy to the profiling
-    // harness (DedupProfile A/Bs MEMORY_AND_DISK vs DISK_ONLY vs no
-    // persist at the 100x/1000x layouts); production callers keep the
-    // default.
+    // is captured by CacheManager at persist() time (the r14 A/B
+    // toggled it per variant at build time and measured the difference),
+    // so the save/restore scopes it to exactly this cache.
     val compKey = "spark.sql.inMemoryColumnarStorage.compressed"
     val spark = df0.sparkSession
     // The set→persist→restore window mutates session-global conf; the
@@ -147,16 +140,13 @@ object Dedup {
     // r14 hygiene finding). Callers that capture this conf for their own
     // persists must build under the same lock — today query build is
     // single-threaded (Orchestrator), so this is belt-and-braces.
-    val df = branchCache match {
-      case None => df0
-      case Some(level) => Dedup.ConfLock.synchronized {
-        val prevComp = spark.conf.getOption(compKey)
-        spark.conf.set(compKey, "false")
-        try df0.persist(level)
-        finally prevComp match {
-          case Some(v) => spark.conf.set(compKey, v)
-          case None => spark.conf.unset(compKey)
-        }
+    val df = Dedup.ConfLock.synchronized {
+      val prevComp = spark.conf.getOption(compKey)
+      spark.conf.set(compKey, "false")
+      try df0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      finally prevComp match {
+        case Some(v) => spark.conf.set(compKey, v)
+        case None => spark.conf.unset(compKey)
       }
     }
     val idExpr =

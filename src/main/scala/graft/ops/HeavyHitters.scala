@@ -41,7 +41,7 @@ import org.apache.spark.sql.functions._
   * string→count table mutated in place. The previous immutable
   * `Map[String, Long]` buffer allocated a fresh HAMT node chain per
   * element — profiled at 2.4 s for ONE aggregate pass over the 15M-row
-  * sf0.1 trigram stream vs 0.18 s for the bare explode (R14Profile),
+  * sf0.1 trigram stream vs 0.18 s for the bare explode (r14 profile),
   * i.e. the aggregate was ~93% allocation, not counting. The table form
   * is the same algorithm step for step (hit → +1, room → insert at 1,
   * full+miss → decrement-all and drop zeros; merge → pointwise add then

@@ -49,9 +49,10 @@ object PageRank {
     // a union whose two branches both scan `e`, and against a cache
     // that is only marked-not-materialized those two branches RACE —
     // each recomputes the upstream edge join before either publishes
-    // the blocks (q_pagerank_nations' 5-way join ran twice; R14Profile
-    // measured the query at 6.6 s vs 1.8 s for the join itself). One
-    // count() runs the expensive subtree exactly once.
+    // the blocks (q_pagerank_nations' 5-way join ran twice; the r14
+    // profile measured the query at 6.6 s vs 1.8 s for the join
+    // itself). One count() runs the expensive subtree exactly once;
+    // the q_pagerank_nations DuckDB oracle pins the result.
     e.count()
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct()

@@ -274,8 +274,8 @@ object Score {
     // midctx join was ALREADY keyed on w2 alone, so the w2 window
     // partitioning adds no distribution risk the join form didn't have.
     // Every marginal VALUE is the identical long, so the doubles —
-    // and the quantized logprobs — are bit-identical (R15Check pins
-    // row equality at sf0.01/sf0.1; oracle hash re-verified).
+    // and the quantized logprobs — are bit-identical (the q_kn_trigram
+    // DuckDB oracle pins row equality by hash).
     val w2w = Window.partitionBy("w2")
     val w23 = Window.partitionBy("w2", "w3")
     val w12 = Window.partitionBy("w1", "w2")
@@ -358,9 +358,9 @@ object Score {
     // one exchange where the r14 form paid an agg exchange plus a join
     // per marginal (10 → 6 Exchanges in the after-plan; window keys
     // are exactly the old join keys, so no new skew). Identical longs
-    // in, identical doubles and quantized logprobs out (R15Check pins
-    // row equality; oracle hash re-verified). The corpus-length frame
-    // still joins ONCE, keyed on the pair.
+    // in, identical doubles and quantized logprobs out (the
+    // q_kn_perplexity DuckDB oracle pins row equality by hash). The
+    // corpus-length frame still joins ONCE, keyed on the pair.
     val w1w = org.apache.spark.sql.expressions.Window.partitionBy("w1")
     val w2w = org.apache.spark.sql.expressions.Window.partitionBy("w2")
     val lpByType = cb

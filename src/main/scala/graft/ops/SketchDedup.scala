@@ -517,9 +517,9 @@ object SketchDedup {
     // arbitrary, commonly ascending df), so ordering by (df, hash)
     // instead of (df, text) still yields a candidate SUPERSET of all
     // true pairs, and exact verification makes the output identical
-    // (R15Check row-identical at sf0.01/sf0.1; cache footprint 19.4 →
-    // 14.8 MiB at sf0.1 with identical wall-clock — the r15 footprint
-    // remedy for corpus-volume caches).
+    // (the q_prefix_jaccard DuckDB oracle pins row identity; cache
+    // footprint 19.4 → 14.8 MiB at sf0.1 with identical wall-clock —
+    // the r15 footprint remedy for corpus-volume caches).
     val ex = base.select(col("id"), explode(col("sh")).as("__s0"))
       .select(col("id"), xxhash64(col("__s0")).as("s"))
     // sh is distinct within a doc, so count(*) = document frequency.

@@ -2,6 +2,8 @@ package graft.plans
 
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 /** Session extension wiring the engine's native expressions into the
   * FunctionRegistry, so they're callable from SQL text:
@@ -13,83 +15,9 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
   */
 class GraftSparkExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(
-      (FunctionIdentifier("nfkc"), NfkcNormalize.info, NfkcNormalize.builder))
-    ext.injectFunction(
-      (FunctionIdentifier("cosine_sim"), CosineSimilarity.info, CosineSimilarity.builder))
-    ext.injectFunction(
-      (FunctionIdentifier("wordlist_hits"), WordlistHits.info, WordlistHits.builder))
-    ext.injectFunction(
-      (FunctionIdentifier("winnow_sels"), WinnowSelect.info, WinnowSelect.builder))
-    ext.injectFunction(
-      (FunctionIdentifier("cdc_chunks"), CdcChunks.info, CdcChunks.builder))
-    ext.injectFunction(
-      (FunctionIdentifier("tokenize_text"), TokenizeText.info, TokenizeText.builder))
-    ext.injectFunction(
-      (FunctionIdentifier("ngram_rep_stats"), NgramRepStats.info, NgramRepStats.builder))
-    ext.injectFunction(
-      (FunctionIdentifier("deflate_len"), DeflateLength.info, DeflateLength.builder))
-    ext.injectFunction(
-      (FunctionIdentifier("deflate_stored_len"),
-        DeflateStoredLength.info, DeflateStoredLength.builder))
-    ext.injectFunction(
-      (FunctionIdentifier("phrase_hits"), PhraseHits.info, PhraseHits.builder))
-    ext.injectFunction(
-      (FunctionIdentifier("l2sq"), L2SqDistance.info, L2SqDistance.builder))
-    ext.injectFunction(
-      (FunctionIdentifier("hilbert_key"), HilbertKey.info, HilbertKey.builder))
-    ext.injectFunction(
-      (FunctionIdentifier("email_hits"), EmailCount.info, EmailCount.builder))
-    ext.injectFunction(
-      (FunctionIdentifier("email_mask"), EmailMask.info, EmailMask.builder))
-    ext.injectFunction(
-      (FunctionIdentifier("pii_counts"), PiiCounts.info, PiiCounts.builder))
-    ext.injectFunction(
-      (FunctionIdentifier("pii_mask"), PiiMaskChain.info, PiiMaskChain.builder))
-    ext.injectFunction(
-      (FunctionIdentifier("pii_mask_ext"),
-        PiiMaskChainExt.info, PiiMaskChainExt.builder))
-    ext.injectFunction(
-      (FunctionIdentifier("pii_scan"), PiiScanFused.info, PiiScanFused.builder))
-    ext.injectFunction(
-      (FunctionIdentifier("phone_simple_hits"),
-        PhoneSimpleCount.info, PhoneSimpleCount.builder))
-    ext.injectFunction(
-      (FunctionIdentifier("dhash_sig"), DHashSig.info, DHashSig.builder))
-    ext.injectFunction(
-      (FunctionIdentifier("audio_sig"), AudioSig.info, AudioSig.builder))
-    ext.injectFunction(
-      (FunctionIdentifier("markdown_strip"),
-        MarkdownStrip.info, MarkdownStrip.builder))
-    ext.injectFunction(
-      (FunctionIdentifier("anchor_text_len"),
-        AnchorTextLen.info, AnchorTextLen.builder))
-    ext.injectFunction(
-      (FunctionIdentifier("token_dist_stats"),
-        TokenDistStats.info, TokenDistStats.builder))
-    ext.injectFunction(
-      (FunctionIdentifier("char_class_stats"),
-        CharClassStats.info, CharClassStats.builder))
-    ext.injectFunction(
-      (FunctionIdentifier("token_set_stats"),
-        TokenSetStats.info, TokenSetStats.builder))
-    ext.injectFunction(
-      (FunctionIdentifier("token_text_stats"),
-        TokenTextStats.info, TokenTextStats.builder))
-    ext.injectFunction(
-      (FunctionIdentifier("text_profile_stats"),
-        TextProfileStats.info, TextProfileStats.builder))
-    ext.injectFunction(
-      (FunctionIdentifier("collapse_repeats"),
-        CollapseRepeats.info, CollapseRepeats.builder))
-    ext.injectFunction(
-      (FunctionIdentifier("strip_tags"), StripTags.info, StripTags.builder))
-    ext.injectFunction(
-      (FunctionIdentifier("dot_product"), DotProduct.info, DotProduct.builder))
-    ext.injectFunction(
-      (FunctionIdentifier("fix_mojibake"), FixMojibake.info, FixMojibake.builder))
-    ext.injectFunction(
-      (FunctionIdentifier("simhash64"), Simhash64.info, Simhash64.builder))
+    GraftFunctions.Kernels.foreach { case (name, info, builder) =>
+      ext.injectFunction((FunctionIdentifier(name), info, builder))
+    }
     ext.injectOptimizerRule(_ => CollapseNfkc)
     ext.injectPlannerStrategy(_ => AsofJoinStrategy)
   }
@@ -97,79 +25,51 @@ class GraftSparkExtensions extends (SparkSessionExtensions => Unit) {
 
 /** Imperative registration for sessions built without the extension. */
 object GraftFunctions {
+
+  /** Every SQL-callable native kernel as (SQL name, info, builder): the
+    * one list both [[GraftSparkExtensions]] and [[register]] install.
+    */
+  val Kernels: Seq[(String, ExpressionInfo, FunctionBuilder)] = Seq(
+    ("nfkc", NfkcNormalize.info, NfkcNormalize.builder),
+    ("cosine_sim", CosineSimilarity.info, CosineSimilarity.builder),
+    ("wordlist_hits", WordlistHits.info, WordlistHits.builder),
+    ("winnow_sels", WinnowSelect.info, WinnowSelect.builder),
+    ("cdc_chunks", CdcChunks.info, CdcChunks.builder),
+    ("tokenize_text", TokenizeText.info, TokenizeText.builder),
+    ("ngram_rep_stats", NgramRepStats.info, NgramRepStats.builder),
+    ("deflate_len", DeflateLength.info, DeflateLength.builder),
+    ("deflate_stored_len", DeflateStoredLength.info, DeflateStoredLength.builder),
+    ("phrase_hits", PhraseHits.info, PhraseHits.builder),
+    ("l2sq", L2SqDistance.info, L2SqDistance.builder),
+    ("hilbert_key", HilbertKey.info, HilbertKey.builder),
+    ("email_hits", EmailCount.info, EmailCount.builder),
+    ("email_mask", EmailMask.info, EmailMask.builder),
+    ("pii_counts", PiiCounts.info, PiiCounts.builder),
+    ("pii_mask", PiiMaskChain.info, PiiMaskChain.builder),
+    ("pii_mask_ext", PiiMaskChainExt.info, PiiMaskChainExt.builder),
+    ("pii_scan", PiiScanFused.info, PiiScanFused.builder),
+    ("phone_simple_hits", PhoneSimpleCount.info, PhoneSimpleCount.builder),
+    ("dhash_sig", DHashSig.info, DHashSig.builder),
+    ("audio_sig", AudioSig.info, AudioSig.builder),
+    ("markdown_strip", MarkdownStrip.info, MarkdownStrip.builder),
+    ("anchor_text_len", AnchorTextLen.info, AnchorTextLen.builder),
+    ("token_dist_stats", TokenDistStats.info, TokenDistStats.builder),
+    ("char_class_stats", CharClassStats.info, CharClassStats.builder),
+    ("token_set_stats", TokenSetStats.info, TokenSetStats.builder),
+    ("token_text_stats", TokenTextStats.info, TokenTextStats.builder),
+    ("text_profile_stats", TextProfileStats.info, TextProfileStats.builder),
+    ("collapse_repeats", CollapseRepeats.info, CollapseRepeats.builder),
+    ("strip_tags", StripTags.info, StripTags.builder),
+    ("dot_product", DotProduct.info, DotProduct.builder),
+    ("fix_mojibake", FixMojibake.info, FixMojibake.builder),
+    ("simhash64", Simhash64.info, Simhash64.builder),
+    ("md5_prefix_long", Md5PrefixLong.info, Md5PrefixLong.builder))
+
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("nfkc"), NfkcNormalize.info, NfkcNormalize.builder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("cosine_sim"), CosineSimilarity.info, CosineSimilarity.builder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("wordlist_hits"), WordlistHits.info, WordlistHits.builder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("winnow_sels"), WinnowSelect.info, WinnowSelect.builder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("cdc_chunks"), CdcChunks.info, CdcChunks.builder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("tokenize_text"), TokenizeText.info, TokenizeText.builder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("ngram_rep_stats"), NgramRepStats.info, NgramRepStats.builder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("deflate_len"), DeflateLength.info, DeflateLength.builder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("deflate_stored_len"),
-      DeflateStoredLength.info, DeflateStoredLength.builder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("phrase_hits"), PhraseHits.info, PhraseHits.builder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("l2sq"), L2SqDistance.info, L2SqDistance.builder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("hilbert_key"), HilbertKey.info, HilbertKey.builder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("email_hits"), EmailCount.info, EmailCount.builder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("email_mask"), EmailMask.info, EmailMask.builder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("pii_counts"), PiiCounts.info, PiiCounts.builder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("pii_mask"), PiiMaskChain.info, PiiMaskChain.builder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("pii_mask_ext"),
-      PiiMaskChainExt.info, PiiMaskChainExt.builder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("phone_simple_hits"),
-      PhoneSimpleCount.info, PhoneSimpleCount.builder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("dhash_sig"), DHashSig.info, DHashSig.builder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("audio_sig"), AudioSig.info, AudioSig.builder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("markdown_strip"),
-      MarkdownStrip.info, MarkdownStrip.builder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("anchor_text_len"),
-      AnchorTextLen.info, AnchorTextLen.builder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("token_dist_stats"),
-      TokenDistStats.info, TokenDistStats.builder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("token_text_stats"),
-      TokenTextStats.info, TokenTextStats.builder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("text_profile_stats"),
-      TextProfileStats.info, TextProfileStats.builder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("collapse_repeats"),
-      CollapseRepeats.info, CollapseRepeats.builder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("strip_tags"), StripTags.info, StripTags.builder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("dot_product"), DotProduct.info, DotProduct.builder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("fix_mojibake"), FixMojibake.info, FixMojibake.builder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("simhash64"), Simhash64.info, Simhash64.builder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("md5_prefix_long"),
-      Md5PrefixLong.info, Md5PrefixLong.builder)
+    Kernels.foreach { case (name, info, builder) =>
+      spark.sessionState.functionRegistry.registerFunction(
+        FunctionIdentifier(name), info, builder)
+    }
     if (!spark.experimental.extraOptimizations.contains(CollapseNfkc))
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ CollapseNfkc

@@ -56,6 +56,45 @@ class ContractSpec extends AnyFunSuite {
       s"plans expressions absent from HostileInputSpec: $missing")
   }
 
+  test("every plans/* kernel is in the registry table, and registers") {
+    // the extension and GraftFunctions.register once kept two hand-synced
+    // lists that drifted apart (md5_prefix_long missing from one,
+    // pii_scan/char_class_stats/token_set_stats from the other); both
+    // now install GraftFunctions.Kernels, so a kernel object that
+    // declares an ExpressionInfo must appear there
+    import scala.jdk.CollectionConverters._
+    val decl = """(?s)object (\w+)[^{\n]*\{(?:(?!\nobject ).)*?private\[plans\] val info""".r
+    val objects = Files.list(Paths.get("src/main/scala/graft/plans"))
+      .iterator().asScala.filter(_.toString.endsWith(".scala"))
+      .flatMap(p => decl.findAllMatchIn(
+        new String(Files.readAllBytes(p), "UTF-8")).map(_.group(1)))
+      .toSet
+    assert(objects.nonEmpty, "kernel scan found nothing — regex rotted")
+    val kernels = graft.plans.GraftFunctions.Kernels
+    val tabled = kernels.map(_._2.getClassName).toSet
+    val missing = objects.filterNot(o => tabled(s"graft.plans.$o"))
+    assert(missing.isEmpty, s"kernels absent from GraftFunctions.Kernels: $missing")
+    val names = kernels.map(_._1)
+    assert(names.distinct.size === names.size, s"duplicate names: $names")
+    val mislabeled = kernels.collect {
+      case (n, info, _) if info.getName != n => s"$n (info says ${info.getName})"
+    }
+    assert(mislabeled.isEmpty, s"table name != ExpressionInfo name: $mislabeled")
+    val spark = TestSpark.spark
+    graft.plans.GraftFunctions.register(spark)
+    val unregistered = names.filterNot(n => spark.catalog.functionExists(n))
+    assert(unregistered.isEmpty, s"not callable after register: $unregistered")
+  }
+
+  test("SPARK_GRAFT_SHUFFLE_PARTS accepts only a positive integer") {
+    assert(Sizing.parseShuffleParts(" 64 ") === 64)
+    Seq("0", "-3", "abc").foreach { raw =>
+      val e = intercept[IllegalArgumentException](Sizing.parseShuffleParts(raw))
+      assert(e.getMessage.contains("SPARK_GRAFT_SHUFFLE_PARTS"), e.getMessage)
+      assert(e.getMessage.contains(s"'$raw'"), e.getMessage)
+    }
+  }
+
   test("bench headline names are real queries") {
     // a typo'd headline entry silently vanishes from BENCH parsing
     val src = read("src/main/scala/graft/Bench.scala")
