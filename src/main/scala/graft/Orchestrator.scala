@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, max}
 
 import graft.ops.Filters
 import graft.sources.Sinks
@@ -53,13 +54,21 @@ object Orchestrator {
     * columns instead costs one local spill of a frame this mode is
     * already writing to parquet twice — cheap against the 40:1
     * text-processing-vs-IO profile (BASELINE.md) it de-duplicates.
+    * Returns the (kept, dropped) row counts from one aggregate over that
+    * same cache (only its `drop_reason` column is read), not from counts
+    * of the two files; aggregated at the RDD level it is one job, where
+    * a DataFrame aggregate costs AQE a map-stage job and a final job.
     */
   private def writeSplit(out: DataFrame, keptPath: String,
-                         droppedPath: String): Unit = {
+                         droppedPath: String): (Long, Long) = {
     val mat = out.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       Filters.kept(mat).write.mode("overwrite").parquet(keptPath)
       Filters.dropped(mat).write.mode("overwrite").parquet(droppedPath)
+      mat.select(col("drop_reason").isNull).queryExecution.toRdd
+        .aggregate((0L, 0L))(
+          (n, r) => if (r.getBoolean(0)) (n._1 + 1, n._2) else (n._1, n._2 + 1),
+          (a, b) => (a._1 + b._1, a._2 + b._2))
     } finally mat.unpersist(blocking = false)
   }
 
@@ -97,17 +106,85 @@ object Orchestrator {
   private def persistentRddIds(spark: SparkSession): Set[Int] =
     spark.sparkContext.getPersistentRDDs.keySet.toSet
 
+  /** Runs `body` with its Spark jobs described as `stage` (the UI's and
+    * listeners' `spark.job.description`), restoring the caller's
+    * description afterwards.
+    */
+  private def described[T](spark: SparkSession, stage: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(stage)
+    try body finally sc.setJobDescription(prev)
+  }
+
+  /** Read back the parquet `written` was just saved to, with its schema:
+    * the read-back cuts lineage, and no footer-inference job runs.
+    */
+  private def readBack(written: DataFrame, path: String): DataFrame =
+    written.sparkSession.read.schema(written.schema).parquet(path)
+
+  private def checkpoint(df: DataFrame, path: String): DataFrame = {
+    df.write.mode("overwrite").parquet(path)
+    readBack(df, path)
+  }
+
+  /** The stage loop shared by [[run]] and [[incrementalRun]]: stages
+    * [fromV..7] over `input` (the kept rows of v{fromV-1}), each
+    * materialized and read back as the next stage's input, then
+    * `run_summary.json` (`prefix` rows first) and the cache fence.
+    */
+  private def stageLoop(spark: SparkSession, outDir: String,
+                        input: DataFrame, fromV: Int, dropPii: Boolean,
+                        prefix: Seq[(String, Long, Long)],
+                        releaseCaches: Boolean, preRun: Set[Int]): DataFrame = {
+    var cur = input
+    val counts = Seq.newBuilder[(String, Long, Long)] ++= prefix
+    stages(dropPii).dropWhile(_._1 < fromV).foreach { case (v, name, fn) =>
+      val stage = s"v$v:$name"
+      described(spark, stage) {
+        val out = fn(cur)
+        val (kept, dropped) =
+          writeSplit(out, versionPath(outDir, v), droppedPath(outDir, v))
+        cur = readBack(out, versionPath(outDir, v))
+        counts += ((stage, kept, dropped))
+      }
+    }
+    val summary = {
+      import spark.implicits._
+      counts.result().toDF("stage", "kept", "dropped")
+    }
+    Sinks.writeMetricsJson(Map("stages" -> summary), s"$outDir/run_summary.json")
+    // Cache hygiene: the stage transforms persist their multi-consumer
+    // branch points (dedupStage etc.) under the engine's
+    // released-by-the-caller convention — and for these entry points
+    // the owning caller is the orchestrator itself. Every stage output
+    // is on disk and `cur` is a parquet read-back, so nothing cached is
+    // live; without the fence a long-lived session invoking runs
+    // repeatedly accretes pinned frames (the production CLI never calls
+    // clearCache). The fence is session-GLOBAL (the stage transforms'
+    // internal persists are not individually reachable from here), so
+    // an embedder holding its own cached frames in the same session
+    // passes releaseCaches = false and owns the release itself (the
+    // fence WARNs when it is about to evict such pre-existing frames;
+    // OrchestratorSpec pins that no DataFrame-level cache survives).
+    if (releaseCaches) releaseFence(spark, preRun)
+    cur
+  }
+
   /** Run stages [fromVersion..7], materializing each boundary.
     *
     * fromVersion = 1 ingests `raw` (required) and writes v1; any higher
     * value resumes from `mainpipe_v{fromVersion-1}.parquet` in `outDir`
     * — `raw` is ignored, matching the reference's "rerun from stage N"
     * workflow. Returns the final frame read back from v7, and writes a
-    * `run_summary.json` with per-stage kept/dropped row counts (H3).
+    * `run_summary.json` with per-stage kept/dropped row counts (H3),
+    * taken from the stage frame the writes already cached.
     *
     * Each stage's input is the parquet read-back, not the in-memory
     * frame: lineage is cut at every boundary (no 7-stage mega-plan), and
-    * a resume sees byte-identical input to the original run.
+    * a resume sees byte-identical input to the original run. A read-back
+    * takes the schema of the frame just written, so it runs no
+    * schema-inference job; only the resume's first read infers.
     */
   def run(spark: SparkSession, outDir: String,
           raw: Option[DataFrame] = None,
@@ -117,40 +194,16 @@ object Orchestrator {
     require(fromVersion >= 1 && fromVersion <= LastVersion,
       s"fromVersion must be in [1, $LastVersion], got $fromVersion")
     val preRun = if (releaseCaches) persistentRddIds(spark) else Set.empty[Int]
-    if (fromVersion == 1) {
-      val rawDf = raw.getOrElse(throw new IllegalArgumentException(
-        "fromVersion = 1 requires the raw input frame"))
-      Pipeline.ingest(rawDf).write.mode("overwrite")
-        .parquet(versionPath(outDir, 1))
-    }
-    val startV = math.max(fromVersion, 2)
-    var cur = spark.read.parquet(versionPath(outDir, startV - 1))
-    val counts = Seq.newBuilder[(String, Long, Long)]
-    stages(dropPii).dropWhile(_._1 < startV).foreach { case (v, name, fn) =>
-      writeSplit(fn(cur), versionPath(outDir, v), droppedPath(outDir, v))
-      cur = spark.read.parquet(versionPath(outDir, v))
-      counts += ((s"v$v:$name", cur.count(),
-        spark.read.parquet(droppedPath(outDir, v)).count()))
-    }
-    val summary = {
-      import spark.implicits._
-      counts.result().toDF("stage", "kept", "dropped")
-    }
-    Sinks.writeMetricsJson(Map("stages" -> summary), s"$outDir/run_summary.json")
-    // Cache hygiene: the stage transforms persist their multi-consumer
-    // branch points (dedupStage etc.) under the engine's
-    // released-by-the-caller convention — and for this entry point the
-    // owning caller is the orchestrator itself. Every stage output is on
-    // disk and `cur` is a parquet read-back, so nothing cached is live;
-    // without the fence a long-lived session invoking runs repeatedly
-    // accretes pinned frames (the production CLI never calls
-    // clearCache). The fence is session-GLOBAL (the stage transforms'
-    // internal persists are not individually reachable from here), so
-    // an embedder holding its own cached frames in the same session
-    // passes releaseCaches = false and owns the release itself (the
-    // fence WARNs when it is about to evict such pre-existing frames).
-    if (releaseCaches) releaseFence(spark, preRun)
-    cur
+    val input =
+      if (fromVersion == 1) {
+        val rawDf = raw.getOrElse(throw new IllegalArgumentException(
+          "fromVersion = 1 requires the raw input frame"))
+        described(spark, "v1:ingest") {
+          checkpoint(Pipeline.ingest(rawDf), versionPath(outDir, 1))
+        }
+      } else spark.read.parquet(versionPath(outDir, fromVersion - 1))
+    stageLoop(spark, outDir, input, math.max(fromVersion, 2), dropPii,
+      Nil, releaseCaches, preRun)
   }
 
   /** Incremental run over a previous completed run's outputs — the
@@ -164,12 +217,16 @@ object Orchestrator {
     * same profile.
     *
     * Provenance semantics: carried-forward rows keep their ORIGINAL
-    * ingest_seq, so established documents keep winning keep-first dedup
-    * against newly-arrived duplicates; order-derived artifacts
-    * (shard_id) therefore follow this run's seq interleaving, not a
-    * from-scratch run's. v2 and the per-stage dropped audits of the
-    * delta prefix are not materialized in this mode (the trade for not
-    * rescanning the corpus); run the full mode when audits are needed.
+    * ingest_seq, and this snapshot's ingest_seq is shifted past the
+    * previous run's v1 maximum, so the two never collide (the dedup
+    * join-back on ingest_seq stays one-to-one) and established documents
+    * keep winning keep-first dedup against newly-arrived duplicates;
+    * order-derived artifacts (shard_id) therefore follow this run's seq
+    * interleaving, not a from-scratch run's. v1 is written with the
+    * shifted seqs, so a chain of incremental runs stays collision-free.
+    * v2 and the per-stage dropped audits of the delta prefix are not
+    * materialized in this mode (the trade for not rescanning the
+    * corpus); run the full mode when audits are needed.
     */
   def incrementalRun(spark: SparkSession, prevDir: String, outDir: String,
                      rawCur: DataFrame, dropPii: Boolean = false,
@@ -177,9 +234,13 @@ object Orchestrator {
     val preRun = if (releaseCaches) persistentRddIds(spark) else Set.empty[Int]
     val prevV1 = spark.read.parquet(versionPath(prevDir, 1))
     val prevV3 = spark.read.parquet(versionPath(prevDir, 3))
-    Pipeline.ingest(rawCur).write.mode("overwrite")
-      .parquet(versionPath(outDir, 1))
-    val curV1 = spark.read.parquet(versionPath(outDir, 1))
+    val curV1 = described(spark, "v1:ingest") {
+      val prevMax = prevV1.agg(max("ingest_seq")).head()
+      val base = if (prevMax.isNullAt(0)) 0L else prevMax.getLong(0) + 1
+      checkpoint(Pipeline.ingest(rawCur)
+        .withColumn("ingest_seq", col("ingest_seq") + base),
+        versionPath(outDir, 1))
+    }
     // persist before each kept(): same pushdown-inlining rationale as
     // [[writeSplit]] — the stage-2 chain must not be substituted into
     // the filter condition (janino limit) or computed twice. The caches
@@ -196,32 +257,15 @@ object Orchestrator {
       persisted += s3
       Filters.kept(s3)
     }
-    try {
-      graft.ops.Incremental.processDelta(curV1, prevV1, prevV3, rowLocal)
-        .write.mode("overwrite").parquet(versionPath(outDir, 3))
-    } finally persisted.foreach(_.unpersist(blocking = false))
-    var cur = spark.read.parquet(versionPath(outDir, 3))
-    val counts = Seq.newBuilder[(String, Long, Long)]
-    counts += (("v3:incremental_prefix", cur.count(), -1L))
-    stages(dropPii).dropWhile(_._1 < 4).foreach { case (v, name, fn) =>
-      writeSplit(fn(cur), versionPath(outDir, v), droppedPath(outDir, v))
-      cur = spark.read.parquet(versionPath(outDir, v))
-      counts += ((s"v$v:$name", cur.count(),
-        spark.read.parquet(droppedPath(outDir, v)).count()))
+    val (v3, v3Rows) = described(spark, "v3:incremental_prefix") {
+      val v3 =
+        try checkpoint(graft.ops.Incremental.processDelta(curV1, prevV1,
+          prevV3, rowLocal), versionPath(outDir, 3))
+        finally persisted.foreach(_.unpersist(blocking = false))
+      (v3, v3.count())
     }
-    val summary = {
-      import spark.implicits._
-      counts.result().toDF("stage", "kept", "dropped")
-    }
-    Sinks.writeMetricsJson(Map("stages" -> summary),
-      s"$outDir/run_summary.json")
-    // same end-of-run cache fence as [[run]] (see the note there,
-    // including the embedder opt-out): the stage transforms'
-    // branch-point persists are owned by this entry point, everything
-    // live is on disk, and OrchestratorSpec pins that no
-    // DataFrame-level cache survives the call
-    if (releaseCaches) releaseFence(spark, preRun)
-    cur
+    stageLoop(spark, outDir, v3, 4, dropPii,
+      Seq(("v3:incremental_prefix", v3Rows, -1L)), releaseCaches, preRun)
   }
 
   /** CLI parity with the reference's `python run_pipeline.py` entry:

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
@@ -16,10 +16,11 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * Scale design: the layout is a global exclusive prefix sum of token
   * counts in stable doc order. A `Window.orderBy` without partitioning
   * moves the whole corpus through ONE task; instead the same two-pass
-  * partition-offset scheme as [[Shard.withGlobalSeq]]: range-partition by
-  * the order key, per-partition token sums (one long per partition to
-  * the driver), prefix-sum those offsets, then number rows locally. Two
-  * passes over the sorted data, O(#partitions) driver state, no
+  * partition-offset scheme as [[Shard.withGlobalSeq]]
+  * ([[GraftSqlBridge.withRunningSum]], on InternalRows): range-partition
+  * by the order key, per-partition token sums (one long per partition
+  * to the driver), prefix-sum those offsets, then number rows locally.
+  * Two passes over the sorted data, O(#partitions) driver state, no
   * single-reducer hotspot.
   */
 object Pack {
@@ -43,7 +44,6 @@ object Pack {
   def withRunningTotalOrdered(df: DataFrame, orderCols: Seq[Column],
                               valCol: String,
                               name: String = "start_offset"): DataFrame = {
-    val spark = df.sparkSession
     val parts = math.max(df.rdd.getNumPartitions, 1)
     // Persisted because BOTH passes consume it: without the cache the
     // entire upstream executes twice. Matters when the upstream is a
@@ -59,29 +59,7 @@ object Pack {
     // external clearCache.
     val sorted = df.repartitionByRange(parts, orderCols: _*)
       .sortWithinPartitions(orderCols: _*)
-    val valIdx = sorted.schema.fieldIndex(valCol)
-    val rdd = sorted.rdd
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // pass 1: one partial sum per partition -> driver prefix sum
-    val partSums = rdd
-      .mapPartitionsWithIndex { (i, it) =>
-        var s = 0L
-        it.foreach(r => s += r.getAs[Number](valIdx).longValue())
-        Iterator((i, s))
-      }
-      .collect().sortBy(_._1).map(_._2)
-    val offsets = partSums.scanLeft(0L)(_ + _)
-    // pass 2: local running totals seeded with the partition's offset
-    val indexed = rdd.mapPartitionsWithIndex { (i, it) =>
-      var run = offsets(i)
-      it.map { r =>
-        val out = Row.fromSeq(r.toSeq :+ run)
-        run += r.getAs[Number](valIdx).longValue()
-        out
-      }
-    }
-    spark.createDataFrame(indexed, StructType(
-      sorted.schema.fields :+ StructField(name, LongType, nullable = false)))
+    GraftSqlBridge.withRunningSum(sorted, name, Some(valCol), persist = true)
   }
 
   /** Per-group variant of [[withRunningTotalOrdered]]: an exclusive

@@ -1,8 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Sharding / partitioned export (SURVEY.md §2.12, W2 + X1-X3).
   *
@@ -12,9 +11,11 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * Scale design: the reference's `df.iloc[start:end]` implies a global
   * row order. A single-partition `Window.orderBy` would serialize the
   * whole dataset through one task at 100 TB, so the global sequence is
-  * assigned with the two-pass partition-offset scheme (`zipWithIndex`):
+  * assigned with the two-pass partition-offset scheme
+  * ([[org.apache.spark.sql.GraftSqlBridge.withRunningSum]]):
   * range-partition by the stable sort key, count per partition, prefix-sum
-  * the offsets on the driver (one tiny action), then number rows locally.
+  * the offsets on the driver (one tiny action), then number rows locally
+  * — on InternalRows, so the wide tokenised rows are never boxed.
   */
 object Shard {
 
@@ -36,15 +37,10 @@ object Shard {
     */
   def withGlobalSeq(df: DataFrame, orderCols: Seq[String],
                     seqName: String): DataFrame = {
-    val spark = df.sparkSession
     val parts = math.max(df.rdd.getNumPartitions, 1)
     val sorted = df.repartitionByRange(parts, orderCols.map(col): _*)
       .sortWithinPartitions(orderCols.head, orderCols.tail: _*)
-    val indexed = sorted.rdd.zipWithIndex().map { case (row, i) =>
-      Row.fromSeq(row.toSeq :+ i)
-    }
-    spark.createDataFrame(indexed,
-      StructType(sorted.schema.fields :+ StructField(seqName, LongType, nullable = false)))
+    GraftSqlBridge.withRunningSum(sorted, seqName)
   }
 
   /** W2+X1: shard_id from the global sequence. */

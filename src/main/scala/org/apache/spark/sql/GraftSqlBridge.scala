@@ -31,6 +31,72 @@ object GraftSqlBridge {
                 plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** `df` plus a trailing non-null LongType column `name` holding the
+    * EXCLUSIVE running sum of `valCol` in partition order (row order
+    * within a partition, partitions by index); with no `valCol` every
+    * row counts 1, so the column is a dense sequence from 0. The one
+    * partition-offset scheme behind `ingest_seq`, `global_seq` and the
+    * packing offsets: pass 1 sums each partition (one long per
+    * partition to the driver, and the last partition is never needed),
+    * the driver prefix-sums those into per-partition offsets, pass 2
+    * numbers rows locally. Both passes run over the SAME
+    * `queryExecution.toRdd`, so an upstream shuffle's map output is
+    * computed once, and rows stay InternalRows throughout: each is
+    * joined to a one-long row through an UnsafeProjection (nested
+    * arrays/structs/maps are copied as bytes, never boxed) and the
+    * result is wrapped without an encoder round trip.
+    *
+    * Numbering is deterministic when the upstream yields the same rows
+    * in the same partition order on every evaluation (a file scan, or a
+    * sort on a unique key). `persist` stores the upstream rows between
+    * the passes at the RDD level when they are costly to recompute; the
+    * blocks then follow the RESULT frame's lineage and ContextCleaner
+    * unpersists them once the caller drops it. `valCol` must be a
+    * non-null integral or floating-point column.
+    */
+  def withRunningSum(df: DataFrame, name: String,
+                     valCol: Option[String] = None,
+                     persist: Boolean = false): DataFrame = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow, UnsafeProjection}
+    import org.apache.spark.sql.types.LongType
+    val schema = df.schema
+    val step: InternalRow => Long = valCol match {
+      case None => _ => 1L
+      case Some(c) =>
+        val i = schema.fieldIndex(c)
+        val dt = schema(i).dataType
+        r => r.get(i, dt).asInstanceOf[Number].longValue()
+    }
+    val scanned = df.queryExecution.toRdd
+    // the scan reuses its row objects: copy before caching them
+    val rows =
+      if (persist) scanned.map(_.copy())
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      else scanned
+    val parts = rows.getNumPartitions
+    val sums =
+      if (parts <= 1) Array.empty[Long]
+      else df.sparkSession.sparkContext.runJob(rows,
+        (it: Iterator[InternalRow]) => { var s = 0L; it.foreach(r => s += step(r)); s },
+        0 until parts - 1)
+    val offsets = sums.scanLeft(0L)(_ + _)
+    val outSchema = schema.add(name, LongType, nullable = false)
+    val numbered = rows.mapPartitionsWithIndex[InternalRow] { (p, it) =>
+      val project = UnsafeProjection.create(outSchema)
+      val seq = new GenericInternalRow(1)
+      val joined = new JoinedRow
+      var run = offsets(p)
+      it.map { r =>
+        seq.setLong(0, run)
+        run += step(r)
+        project(joined(r, seq))
+      }
+    }
+    df.sparkSession.asInstanceOf[classic.SparkSession]
+      .internalCreateDataFrame(numbered, outSchema)
+  }
+
   /** A DataFrame's analyzed logical plan. */
   def analyzed(df: DataFrame): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.queryExecution.analyzed
